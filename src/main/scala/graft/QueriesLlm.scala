@@ -1212,7 +1212,7 @@ object QueriesLlm {
     //     invisible there. This row re-measures raw-vs-residual every
     //     round on the deterministic hash-derived mixture-of-Gaussians
     //     corpus (the d_semantic_recall_geo device at cluster
-    //     granularity — graft.ResidualCurve.mogCorpus, no RNG, same
+    //     granularity — SyntheticData.mogCorpus, no RNG, same
     //     rows every run; the sf dir is intentionally unused: the
     //     corpus IS the planted geometry) at the adjudicated operating
     //     point mog:2000:16:0.15, lloyd=2, nprobe=4, m=16, ksub=64,
@@ -1223,7 +1223,7 @@ object QueriesLlm {
     //     quantization. No SQL oracle (native kernels + recall
     //     measurement); VectorSpec pins the structural margin. ---
     ("r14d_ivfpq_residual_geo", (s, _) => {
-      val e = graft.ResidualCurve.mogCorpus(s, 2000, 16, 0.15)
+      val e = graft.sources.SyntheticData.mogCorpus(s, 2000, 16, 0.15)
         .localCheckpoint(true)
       val lloyd = 2; val nprobe = 4; val nlist = 16; val k = 5
       val queries = e.filter(col("vec_id") < 50)

@@ -1712,8 +1712,8 @@ object SparkEntry {
     //     unrolled form's 1..10 require() points at). Identical math and
     //     float-op ordering by construction, so it hashes against the
     //     identical oracle; GraphSpec pins exact double equality vs the
-    //     unrolled form at k ≤ 10 and PrScaleRun measures flat s/step to
-    //     k = 50 at sf1 (BENCH_SF10.md r14 addendum). ---
+    //     unrolled form at k ≤ 10; flat s/step to k = 50 at sf1 is
+    //     measured in BENCH_SF10.md r14 addendum 2. ---
     ("g1b_pagerank_ckpt", (s, d) => {
       // same explicit-width basket key exchange as g1_pagerank (r20)
       val li = T(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey"))

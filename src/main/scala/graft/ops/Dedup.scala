@@ -902,8 +902,8 @@ object Dedup {
     * (n_docs, prefix_rows, candidates, output_pairs, cand_per_output) —
     * from the SAME stages [[tokenJaccardPairs]]' default path runs, so a
     * candidate-volume or prefix-length change in the hottest dedup
-    * family shows up as a per-leg NUMBER in `graft.DedupStats` /
-    * `tools/fullreg_report.py` instead of a wall-clock mystery. */
+    * family shows up as a NUMBER instead of a wall-clock mystery (the
+    * r12 readings across two decades: BENCH_SF10.md r12 addendum). */
   def prefixJoinStats(df: DataFrame, idCol: String, textCol: String,
                       threshold: Double,
                       bucketCols: Seq[String] = Nil): DataFrame = {

@@ -321,7 +321,7 @@ object Similarity {
     // all recompute the identical 2 000-row table. Checkpointing holds
     // nlist rows (config-sized) and leaves every value bit-identical;
     // measured on c5b's dequantized 1 M-item catalog it is half of the
-    // 5.6 → 3.7 s cut (ScratchC5b V0 vs V3). Eager, not lazy — the lazy
+    // 5.6 → 3.7 s cut (OPTIMIZATION_r20.md §2). Eager, not lazy — the lazy
     // form deadlocks under concurrent materialization (r18, see
     // refineCentroids). refineCentroids' own output is already
     // checkpointed per round; seeding it with the checkpointed frame

@@ -1685,10 +1685,9 @@ object TextAnalysis {
     * corpus, then per-document windows — the prefix char offset and the
     * `lead` chain that assembles every requested n's grams come from the
     * SAME (doc, pos) sort, so all gram families share one exchange; the
-    * exploded frame is barriered (localCheckpoint) so the per-n
-    * aggregates don't re-derive it. Each family is then a
-    * (doc, gram)-keyed linear aggregation — keys include the document
-    * id, so hub documents don't concentrate (the quadratic-free
+    * exploded frame stays lazy (see the storage note in the body). Each
+    * family is then a (doc, gram)-keyed linear aggregation — keys include
+    * the document id, so hub documents don't concentrate (the quadratic-free
     * contrast: `textFeatureMatrix`'s in-row O(types·len) fold is per-row
     * but this operator's counts must see all occurrences, so they
     * shuffle once). Docs shorter than n tokens emit no n-grams and
@@ -1701,8 +1700,7 @@ object TextAnalysis {
     * parameters. */
   def gopherRepetition(df: DataFrame, idCol: String, textCol: String,
                        topNs: Seq[Int] = Seq(2, 3, 4),
-                       dupNs: Seq[Int] = Seq(5, 10),
-                       materialize: Boolean = false): DataFrame = {
+                       dupNs: Seq[Int] = Seq(5, 10)): DataFrame = {
     require(topNs.nonEmpty || dupNs.nonEmpty,
       "gopherRepetition: need at least one n-gram size")
     // duplicate n within a family would emit duplicate output columns
@@ -1719,33 +1717,19 @@ object TextAnalysis {
       org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     val tok0 = df.select(col(idCol),
       posexplode(tokens(col(textCol))).as(Seq("__pos", "__tok")))
-    // STORAGE CONTRACT (the bpeMergesMaterialized trade, r17 A/B'd at
-    // sf10 — BENCH_SF10.md r17 addendum 2): `materialize = true`
-    // localCheckpoints the token-exploded frame — one row per token
-    // with maxN−1 lead columns + the char-offset prefix sum, i.e.
-    // ~maxN× corpus bytes of EXECUTOR-LOCAL storage — so the
-    // |topNs| + |dupNs| + 1 aggregate families read it without
-    // re-deriving the tokenize + window sort. `materialize = false`
-    // (the DEFAULT — the A/B REFUTED the r12–r16 hard-coded
-    // checkpoint) keeps the frame lazy, and the win is COLUMN PRUNING:
-    // each family re-plans the exploded frame with only ITS columns —
-    // the top-2 family shuffles (tok, t1), not the full maxN-wide lead
-    // frame — so the per-family exchanges are narrow, while the
-    // checkpoint materializes every lead column once and makes every
-    // family read all of them (verified: the lazy plan has one
-    // exchange PER family, 0 ReusedExchange — it recomputes, narrowly,
-    // and still wins). Measured back-to-back interleaved (GopherAb):
-    // sf0.1 2.0 s materialized / 1.5 s lazy; sf10 38.5 / 26.6.
-    // Identical output either way (checksum-asserted in the A/B
-    // harness). `materialize = true` remains the knob for driving the
-    // families as SEPARATE actions (the bpeMergesMaterialized regime),
-    // where lazy would re-tokenize per ACTION with no shared plan.
-    val withLeads0 = (1 until maxN).foldLeft(
+    // STORAGE: the token-exploded lead frame stays LAZY, not
+    // localCheckpointed. The win is COLUMN PRUNING: each family re-plans
+    // the exploded frame with only ITS columns (the top-2 family
+    // shuffles (tok, t1), not the full maxN-wide lead frame), so the
+    // per-family exchanges are narrow, while a checkpoint would write
+    // every lead column (~maxN× corpus bytes of executor-local storage)
+    // and make every family read all of them. Measured back-to-back with
+    // checksum-equal outputs: sf0.1 2.0 s checkpointed / 1.5 s lazy;
+    // sf10 38.5 / 26.6 (BENCH_SF10.md r17 addendum 2).
+    val withLeads = (1 until maxN).foldLeft(
       tok0.withColumn("__cstart", coalesce(
         sum((length(col("__tok")) + 1).cast("long")).over(wPrefix), lit(0L)))
     )((d, k) => d.withColumn(s"__t$k", lead(col("__tok"), k).over(w)))
-    val withLeads =
-      if (materialize) withLeads0.localCheckpoint(true) else withLeads0
     def gram(n: Int): Column =
       concat_ws(" ", (col("__tok") +: (1 until n).map(k => col(s"__t$k"))): _*)
     // chars covered by every occurrence of the most frequent n-gram

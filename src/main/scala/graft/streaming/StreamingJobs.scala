@@ -147,37 +147,6 @@ object StreamingJobs {
       .toDF("user_id", "event_id", "clicks_5min", "views_5min", "events_5min")
   }
 
-  /** T6/S6/T10 (small-store fallback): per-batch upsert that rewrites the
-    * WHOLE store from current + incoming — O(store size) per micro-batch,
-    * fine for request-scoped or demo-sized stores only. The scale path is
-    * [[upsertOnlineStorePartitioned]], which rewrites only the hash
-    * buckets a batch touches. Checkpointing makes the upsert
-    * effectively-once. */
-  def upsertOnlineStore(features: DataFrame, keyCols: Seq[String],
-                        tsCol: String, tiebreakCol: String, storePath: String,
-                        checkpointPath: String): StreamingQuery =
-    features.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        // Only a genuinely absent store falls back to empty; any other read
-        // failure (FS hiccup, corrupt footer) propagates and fails the
-        // micro-batch — a catch-all here would silently overwrite the store
-        // with just the incoming batch, destroying prior keys.
-        val existing =
-          if (pathExists(spark, storePath)) spark.read.parquet(storePath)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-        val merged = FeatureStore.latestPerKey(
-          existing.unionByName(batch, allowMissingColumns = true),
-          keyCols, tsCol, tiebreakCol)
-        merged.write.mode("overwrite").parquet(storePath + ".tmp")
-        spark.read.parquet(storePath + ".tmp")
-          .write.mode("overwrite").parquet(storePath)
-      }
-      .start()
-
   /** T6 at 100 TB: hash-bucket-partitioned online-store upsert. The store
     * is a parquet table partitioned by
     * `__bucket = pmod(xxhash64(key...), numBuckets)`; each micro-batch
@@ -205,39 +174,64 @@ object StreamingJobs {
       .start()
 
   /** The per-micro-batch bucketed merge (exposed for batch upsert jobs and
-    * tests). The `touched` collect is bounded by numBuckets — a driver-side
-    * action on purpose, it IS the partition-pruning decision. */
+    * tests). */
   def upsertBucketedBatch(batch: DataFrame, keyCols: Seq[String],
                           tsCol: String, tiebreakCol: String,
-                          storePath: String, numBuckets: Int): Unit = {
-    val spark = batch.sparkSession
-    val incoming = batch.withColumn("__bucket",
-      pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets)).cast("int"))
+                          storePath: String, numBuckets: Int): Unit =
+    mergeTouchedBuckets(batch.withColumn("__bucket",
+        pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets)).cast("int")),
+      storePath)(FeatureStore.latestPerKey(_, keyCols, tsCol, tiebreakCol))
+
+  /** The shared body of every bucketed merge ([[upsertBucketedBatch]],
+    * [[incrementalDedupBatch]], [[incrementalPassageDedupBatch]]): read
+    * ONLY the store buckets the `__bucket`-tagged incoming rows touch,
+    * union them with the incoming rows, apply the caller's `merge` and
+    * swap the result in with [[stageAndSwapBuckets]]. The `touched`
+    * collect is bounded by numBuckets — a driver-side action on purpose,
+    * it IS the partition-pruning decision.
+    *
+    * A batch with no rows touches no bucket and leaves the store as it
+    * is. Structured Streaming runs such no-data micro-batches to move
+    * the watermark and evict state, so every watermarked stream sees
+    * them; staging their empty merge would leave no parquet files for
+    * the swap to read (UNABLE_TO_INFER_SCHEMA). */
+  private def mergeTouchedBuckets(incoming: DataFrame, storePath: String)
+                                 (merge: DataFrame => DataFrame): Unit = {
+    val spark = incoming.sparkSession
     val touched = incoming.select(col("__bucket")).distinct()
       .collect().map(_.getInt(0))
-    // Explicit existence check, NOT a catch-all: a transient read failure on
-    // an existing store must fail the micro-batch (checkpoint retries it),
-    // never silently rewrite touched buckets from the batch alone.
-    val existing =
-      if (pathExists(spark, storePath))
-        spark.read.parquet(storePath)
-          .filter(col("__bucket").isin(touched.map(Integer.valueOf): _*))
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        incoming.schema)
-    val merged = FeatureStore.latestPerKey(
-      existing.unionByName(incoming, allowMissingColumns = true),
-      keyCols, tsCol, tiebreakCol)
-    stageAndSwapBuckets(spark, merged, storePath)
+    if (touched.nonEmpty) {
+      // Explicit existence check, NOT a catch-all: a transient read failure
+      // on an existing store must fail the micro-batch (checkpoint retries
+      // it), never silently rewrite touched buckets from the batch alone.
+      val existing =
+        if (pathExists(spark, storePath))
+          spark.read.parquet(storePath)
+            .filter(col("__bucket").isin(touched.map(Integer.valueOf): _*))
+        else spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          incoming.schema)
+      stageAndSwapBuckets(spark,
+        merge(existing.unionByName(incoming, allowMissingColumns = true)),
+        storePath)
+    }
   }
+
+  /** First writer wins: keep the row with the smallest `order` per
+    * content key `__key`. A replayed batch carries its ORIGINAL batchId
+    * from the checkpoint, so the minimum — and the store — is unchanged
+    * on retry. */
+  private def firstWriterWins(order: Column*)(df: DataFrame): DataFrame =
+    df.withColumn("__rn", row_number().over(
+        Window.partitionBy(col("__key")).orderBy(order: _*)))
+      .filter(col("__rn") === 1).drop("__rn")
 
   /** Stage the merged touched buckets, then dynamic-overwrite ONLY those
     * bucket partitions into the store (Spark rejects overwriting a path
     * the plan reads from); untouched bucket directories are neither read
     * nor rewritten. Both steps are O(touched buckets). Shared by every
-    * bucketed foreachBatch merge ([[upsertBucketedBatch]],
-    * [[incrementalDedupBatch]]) so the crash-window proof covers all of
-    * them. */
+    * bucketed merge through [[mergeTouchedBuckets]], so the crash-window
+    * proof covers all of them. */
   private def stageAndSwapBuckets(spark: SparkSession, merged: DataFrame,
                                   storePath: String): Unit = {
     val stage = storePath + ".stage"
@@ -245,9 +239,10 @@ object StreamingJobs {
     // file: without it, every writer task holding rows of a bucket opens
     // its own file, and since the merge shuffle's AQE-coalesced task
     // count grows with store size, file count crept toward
-    // numBuckets x tasks (IncDedupLongRun measured 64 buckets -> 462
+    // numBuckets x tasks (a 100-batch long run measured 64 buckets -> 462
     // files and 13-row parquet files inflating the store ~2x at
-    // numBuckets=1024). One extra exchange of the touched data — the
+    // numBuckets=1024; COVERAGE.md row "Incremental streaming dedup").
+    // One extra exchange of the touched data — the
     // same magnitude the merge shuffle already paid — buys a store whose
     // file count is ≤ numBuckets FOREVER, with bucket-sized row groups.
     merged.repartition(col("__bucket"))
@@ -303,37 +298,16 @@ object StreamingJobs {
       .start()
 
   /** The per-micro-batch first-wins merge (exposed for batch backfills and
-    * tests). The `touched` collect is bounded by numBuckets — it IS the
-    * partition-pruning decision, same contract as [[upsertBucketedBatch]]. */
+    * tests): min (seen_batch, id) per content key. */
   def incrementalDedupBatch(batch: DataFrame, idCol: String, textCol: String,
                             storePath: String, batchId: Long,
-                            numBuckets: Int): Unit = {
-    val spark = batch.sparkSession
-    val incoming = batch
+                            numBuckets: Int): Unit =
+    mergeTouchedBuckets(batch
       .withColumn("__key", md5(graft.ops.Dedup.normalizeText(col(textCol))))
       .withColumn("__seen_batch", lit(batchId))
       .withColumn("__bucket",
-        pmod(xxhash64(col("__key")), lit(numBuckets)).cast("int"))
-    val touched = incoming.select(col("__bucket")).distinct()
-      .collect().map(_.getInt(0))
-    val existing =
-      if (pathExists(spark, storePath))
-        spark.read.parquet(storePath)
-          .filter(col("__bucket").isin(touched.map(Integer.valueOf): _*))
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        incoming.schema)
-    // First writer wins: min (seen_batch, id) per content key. A replayed
-    // batch carries its ORIGINAL batchId from the checkpoint, so the
-    // minimum — and the store — is unchanged on retry.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__key"))
-      .orderBy(col("__seen_batch").asc, col(idCol).asc)
-    val merged = existing.unionByName(incoming, allowMissingColumns = true)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    stageAndSwapBuckets(spark, merged, storePath)
-  }
+        pmod(xxhash64(col("__key")), lit(numBuckets)).cast("int")),
+      storePath)(firstWriterWins(col("__seen_batch").asc, col(idCol).asc))
 
   /** The deduped corpus accumulated by [[incrementalDedupStream]], with
     * the merge's bookkeeping columns dropped. */
@@ -357,32 +331,15 @@ object StreamingJobs {
   def incrementalPassageDedupBatch(batch: DataFrame, idCol: String,
                                    textCol: String, storePath: String,
                                    batchId: Long, numBuckets: Int,
-                                   size: Int = 16): Unit = {
-    val spark = batch.sparkSession
-    val incoming = graft.ops.TextAnalysis
+                                   size: Int = 16): Unit =
+    mergeTouchedBuckets(graft.ops.TextAnalysis
       .segmentPassages(batch, idCol, textCol, size)
       .withColumn("__key", md5(col("__passage")))
       .withColumn("__seen_batch", lit(batchId))
       .withColumn("__bucket",
-        pmod(xxhash64(col("__key")), lit(numBuckets)).cast("int"))
-    val touched = incoming.select(col("__bucket")).distinct()
-      .collect().map(_.getInt(0))
-    val existing =
-      if (pathExists(spark, storePath))
-        spark.read.parquet(storePath)
-          .filter(col("__bucket").isin(touched.map(Integer.valueOf): _*))
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        incoming.schema)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__key"))
-      .orderBy(col("__seen_batch").asc, col(idCol).asc,
-        col("passage_idx").asc)
-    val merged = existing.unionByName(incoming, allowMissingColumns = true)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    stageAndSwapBuckets(spark, merged, storePath)
-  }
+        pmod(xxhash64(col("__key")), lit(numBuckets)).cast("int")),
+      storePath)(firstWriterWins(col("__seen_batch").asc, col(idCol).asc,
+        col("passage_idx").asc))
 
   /** Streaming form of [[incrementalPassageDedupBatch]] — the same
     * foreachBatch shape as [[incrementalDedupStream]]: the checkpoint

@@ -346,6 +346,47 @@ class StreamingSpec extends AnyFunSuite {
     assert(readStore() === Set((1L, 200L, 9.0), (2L, 100L, 6.0)))
   }
 
+  test("bucketed merges: an empty (no-data) batch leaves an existing store unchanged") {
+    // Structured Streaming runs no-data micro-batches to move the
+    // watermark and evict state; a batch with no rows touches no bucket
+    // and must neither fail nor rewrite the store.
+    import java.io.File
+    def files(store: String): Seq[(String, Long, Long)] = {
+      def walk(f: File): Seq[File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new File(store)).map(f =>
+        (f.getPath, f.length(), f.lastModified())).sorted
+    }
+    def rows(store: String) = spark.read.parquet(store).collect().toSet
+
+    val up = Files.createTempDirectory("graft-empty-up").toString + "/store"
+    def feat(rs: Seq[(Long, Long, Double)]) = rs
+      .toDF("k", "ts_s", "v")
+      .withColumn("ts", timestamp_seconds(col("ts_s")))
+      .select("k", "ts", "v")
+    StreamingJobs.upsertBucketedBatch(
+      feat((1L to 10L).map(k => (k, 100L, k * 1.0))),
+      Seq("k"), "ts", "v", up, numBuckets = 4)
+    val (upRows, upFiles) = (rows(up), files(up))
+    StreamingJobs.upsertBucketedBatch(feat(Seq.empty),
+      Seq("k"), "ts", "v", up, numBuckets = 4)
+    assert(rows(up) === upRows)
+    assert(files(up) === upFiles)
+
+    val dd = Files.createTempDirectory("graft-empty-dd").toString + "/store"
+    def docs(rs: Seq[(Long, String)]) = rs.toDF("doc_id", "text")
+    StreamingJobs.incrementalDedupBatch(
+      docs(Seq((1L, "alpha beta"), (2L, "ALPHA  beta"), (3L, "gamma"))),
+      "doc_id", "text", dd, batchId = 0L, numBuckets = 4)
+    val (ddRows, ddFiles) = (rows(dd), files(dd))
+    StreamingJobs.incrementalDedupBatch(docs(Seq.empty),
+      "doc_id", "text", dd, batchId = 1L, numBuckets = 4)
+    assert(rows(dd) === ddRows)
+    assert(files(dd) === ddFiles)
+    assert(StreamingJobs.dedupedCorpus(spark, dd).select("doc_id")
+      .as[Long].collect().toSet === Set(1L, 3L))
+  }
+
   test("partitioned upsert: streaming foreachBatch end-to-end (T6)") {
     val base = Files.createTempDirectory("graft-pstream").toString
     val src = base + "/src"
@@ -750,12 +791,12 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("incremental dedup long-run: store file count is bounded (swap replaces, never accumulates)") {
-    // The long-run contract the IncDedupLongRun harness measures at 100
-    // batches, pinned structurally at 12: the dynamic-partition swap
-    // REPLACES each touched bucket directory, so files-per-bucket never
-    // grows with batch count — the store needs no compaction pass. (The
-    // knob that governs REWRITE cost is numBuckets ∝ corpus; see the
-    // harness scaladoc.)
+    // The long-run contract measured at 100 batches (COVERAGE.md row
+    // "Incremental streaming dedup"), pinned structurally at 12: the
+    // dynamic-partition swap REPLACES each touched bucket directory, so
+    // files-per-bucket never grows with batch count — the store needs no
+    // compaction pass. (The knob that governs REWRITE cost is
+    // numBuckets ∝ corpus; see that row.)
     val base = Files.createTempDirectory("graft-incdedup-lr").toString
     val store = base + "/store"
     def parquetFiles(): Long = {

@@ -102,28 +102,6 @@ def main():
     if only_a or only_b:
         print("only-sf1:", only_a, " only-sf10:", only_b)
 
-    # prefix-join candidate-volume table (written by sf_fullreg_sweep.sh
-    # via graft.DedupStats) — the in-round detector for the regression
-    # class the r11 Jaccard window change belonged to
-    for tag in ("sf1", "sf10"):
-        path = f"{base}/dedup_stats_{tag}.json"
-        if not os.path.exists(path):
-            continue
-        print(f"dedup prefix-join stats ({tag}):")
-        for line in open(path):
-            line = line.strip()
-            if not line:
-                continue
-            try:
-                r = json.loads(line)
-                print(f"  {r['query']:24s} docs={r['n_docs']:>9} "
-                      f"prefix={r['prefix_rows']:>10} "
-                      f"cand={r['candidates']:>10} "
-                      f"out={r['output_pairs']:>8} "
-                      f"cand/out={r['cand_per_output']:.2f}")
-            except Exception:
-                print(f"  [unparsed] {line[:120]}")
-
 
 if __name__ == "__main__":
     main()

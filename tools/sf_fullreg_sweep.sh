@@ -18,11 +18,6 @@ run() { # run <sfdir> <tag>
   SPARK_DRIVER_MEM=48g SPARK_GRAFT_BENCH_RUNS=1 \
     tools/runjava.sh graft.Bench "$1" 2>/dev/null | tail -1
   cp target/bench_full.json "target/bench_fullreg_$2.json"
-  # prefix-join candidate-volume observability (fullreg_report prints it):
-  # a candidate or prefix-length regression in the dedup family becomes a
-  # per-leg number instead of a wall-clock mystery
-  tools/runjava.sh graft.DedupStats "$1" 2>/dev/null \
-    > "target/dedup_stats_$2.json" || true
 }
 
 run target/sf1  sf1
