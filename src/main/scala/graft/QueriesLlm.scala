@@ -1061,7 +1061,7 @@ object QueriesLlm {
       val refTop = Similarity.rerankExactTopK(
         short.select(col("query_id"), col("item_id")),
         e.filter(col("vec_id") < 50), e, "vec_id", "vec_id", "embedding",
-        5, "cosine")
+        5, cb.metric)
         .select(col("query_id"), col("item_id"))
       val armed = adcTop.withColumn("__arm", lit("a"))
         .unionAll(refTop.withColumn("__arm", lit("r")))
@@ -1123,7 +1123,7 @@ object QueriesLlm {
       val refTop = Similarity.rerankExactTopK(
         short.select(col("nprobe"), col("query_id"), col("item_id")),
         e.filter(col("vec_id") < 50), e, "vec_id", "vec_id", "embedding",
-        5, "cosine", armCols = Seq("nprobe"))
+        5, cb.metric, armCols = Seq("nprobe"))
         .select(col("nprobe"), col("query_id"), col("item_id"))
       val armed = adcTop.withColumn("__arm", lit("a"))
         .unionAll(refTop.withColumn("__arm", lit("r")))
@@ -1184,7 +1184,7 @@ object QueriesLlm {
       val refTop = Similarity.rerankExactTopK(
         short.select(col("nprobe"), col("query_id"), col("item_id")),
         e.filter(col("vec_id") < 50), e, "vec_id", "vec_id", "embedding",
-        5, "cosine", armCols = Seq("nprobe"))
+        5, idx.metric, armCols = Seq("nprobe"))
         .select(col("nprobe"), col("query_id"), col("item_id"))
       val armed = adcTop.withColumn("__arm", lit("a"))
         .unionAll(refTop.withColumn("__arm", lit("r")))
@@ -1285,7 +1285,7 @@ object QueriesLlm {
         .select(col("__fam"), col("query_id"), col("item_id"))
       val refTop = Similarity.rerankExactTopK(
         shortAll.select(col("__fam"), col("query_id"), col("item_id")),
-        queries, e, "vec_id", "vec_id", "embedding", k, "cosine",
+        queries, e, "vec_id", "vec_id", "embedding", k, idx.metric,
         armCols = Seq("__fam"))
         .select(col("__fam"), col("query_id"), col("item_id"))
       val armed = adcTop.withColumn("__arm", lit("a"))

@@ -194,4 +194,16 @@ class ScaleAndGuardsSpec extends AnyFunSuite {
     assert(Explain.unboundedCollects(ops).isEmpty,
       s"ops/ carries unbounded collects: ${Explain.unboundedCollects(ops)}")
   }
+
+  test("boundedCollect: a frame of cap rows is collected; cap + 1 rows " +
+    "fail loudly, naming the frame") {
+    val df = spark.range(5).toDF("id")
+    val got = ops.Similarity.boundedCollect(df, 5, "five-row frame")
+    assert(got.map(_.getLong(0)).sorted.toSeq === (0L until 5L))
+    val err = intercept[IllegalArgumentException] {
+      ops.Similarity.boundedCollect(df, 4, "five-row frame")
+    }
+    assert(err.getMessage.contains("five-row frame") &&
+      err.getMessage.contains("more than 4 rows"), err.getMessage)
+  }
 }

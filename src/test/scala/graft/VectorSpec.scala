@@ -872,4 +872,97 @@ class VectorSpec extends AnyFunSuite {
       "duplicate keys must break the fold (overcount) — the fold is only " +
         "valid on key-unique sides")
   }
+
+  // --- Non-cosine metrics against an exact reference: the l2 and dot
+  //     dispatch is pinned against a driver-side brute force, and every
+  //     ANN form at its exactness limit against bruteForceTopK(l2). ---
+
+  /** Driver-side top-k: (query_id, rank, item_id, score), ranked by
+    * (score desc, item_id), optionally skipping the query's own id. */
+  private def driverTopK(data: Seq[(Long, Seq[Float])], qIds: Seq[Long],
+                         k: Int, excludeSelf: Boolean,
+                         score: (Seq[Float], Seq[Float]) => Double) = {
+    val byId = data.toMap
+    qIds.flatMap { q =>
+      data.filter(r => !excludeSelf || r._1 != q)
+        .map { case (i, v) => (i, score(byId(q), v)) }
+        .sortBy { case (i, s) => (-s, i) }.take(k).zipWithIndex
+        .map { case ((i, s), r) => (q, r + 1, i, s) }
+    }
+  }
+
+  test("bruteForceTopK with l2 and dot equals a driver-side brute force") {
+    val data = seededVecs(30, 8, 41L)
+    val items = data.toDF("vec_id", "embedding")
+    val qIds = Seq(0L, 3L, 7L, 12L)
+    val queries = data.filter(r => qIds.contains(r._1))
+      .toDF("vec_id", "embedding")
+    val dot: (Seq[Float], Seq[Float]) => Double =
+      (a, b) => a.zip(b).map { case (x, y) => x.toDouble * y }.sum
+    val negL2: (Seq[Float], Seq[Float]) => Double = (a, b) =>
+      -math.sqrt(a.zip(b).map { case (x, y) =>
+        val d = x.toDouble - y; d * d }.sum)
+    for ((metric, f) <- Seq("dot" -> dot, "l2" -> negL2);
+         excl <- Seq(false, true)) {
+      val got = ranked(Similarity.bruteForceTopK(queries, items, "vec_id",
+        "vec_id", "embedding", 5, metric, excludeSelf = excl))
+      val want = driverTopK(data, qIds, 5, excl, f)
+      assert(got.map(r => (r._1, r._2, r._3)) ===
+        want.map(r => (r._1, r._2, r._3)), s"$metric excludeSelf=$excl")
+      got.zip(want).foreach { case (g, w) =>
+        assert(math.abs(g._4 - w._4) < 1e-9, s"$metric score at $g")
+      }
+    }
+  }
+
+  test("l2 exactness limits: pqTopK, clusterPrunedTopKPq, " +
+    "clusterPrunedTopKPqResidual and clusterPrunedTopKStored rank like " +
+    "bruteForceTopK(l2)") {
+    val data = seededVecs(20, 8, 43L)
+    val items = data.toDF("vec_id", "embedding")
+    val queries = data.take(4).toDF("vec_id", "embedding")
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "rank", "item_id")
+        .as[(Long, Int, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
+    val exact = ranks(Similarity.bruteForceTopK(queries, items, "vec_id",
+      "vec_id", "embedding", 5, "l2", excludeSelf = true))
+    // ksub = n, no Lloyd rounds: every subvector is its own sub-centroid,
+    // so the ADC distance is the exact squared L2 distance
+    val cb = Similarity.pqTrain(items, "vec_id", "embedding", m = 4,
+      ksub = 20, metric = "l2", refineIters = 0)
+    assert(cb.ksub === 20 && cb.metric === "l2")
+    assert(ranks(Similarity.pqTopK(queries, items, "vec_id", "vec_id",
+      "embedding", 5, cb, excludeSelf = true)) === exact, "pqTopK")
+    assert(ranks(Similarity.clusterPrunedTopKPq(queries, items, "vec_id",
+      "vec_id", "embedding", 5, cb, nlist = 4, nprobe = 4,
+      excludeSelf = true)) === exact, "clusterPrunedTopKPq")
+    // a coarse codebook only ranks approximately; a refine shortlist
+    // covering the catalog (5·4 ≥ 19 candidates) re-ranks exactly
+    val coarse = Similarity.pqTrain(items, "vec_id", "embedding", m = 4,
+      ksub = 4, metric = "l2", refineIters = 1)
+    assert(ranks(Similarity.pqTopKRefined(queries, items, "vec_id",
+      "vec_id", "embedding", 5, coarse, refineFactor = 4,
+      excludeSelf = true)) === exact, "pqTopKRefined")
+    assert(ranks(Similarity.clusterPrunedTopKPq(queries, items, "vec_id",
+      "vec_id", "embedding", 5, coarse, nlist = 4, nprobe = 4,
+      refineFactor = 4, excludeSelf = true)) === exact,
+      "clusterPrunedTopKPq refined")
+    val idx = Similarity.ivfPqTrain(items, "vec_id", "embedding", m = 4,
+      ksub = 20, nlist = 4, metric = "l2", pqIters = 0)
+    assert(ranks(Similarity.clusterPrunedTopKPqResidual(queries, items,
+      "vec_id", "vec_id", "embedding", 5, idx, nprobe = 4,
+      excludeSelf = true)) === exact, "clusterPrunedTopKPqResidual")
+    val idxCoarse = Similarity.ivfPqTrain(items, "vec_id", "embedding",
+      m = 4, ksub = 4, nlist = 4, metric = "l2", pqIters = 1)
+    assert(ranks(Similarity.clusterPrunedTopKPqResidual(queries, items,
+      "vec_id", "vec_id", "embedding", 5, idxCoarse, nprobe = 4,
+      refineFactor = 4, excludeSelf = true)) === exact,
+      "clusterPrunedTopKPqResidual refined")
+    // stored assignment: nprobe = nlist probes every cell
+    val cents = Similarity.pickCentroids(items, "vec_id", "embedding", 4)
+    val catalog = Similarity.assignClusters(items, "embedding", cents)
+    assert(ranks(Similarity.clusterPrunedTopKStored(queries, catalog,
+      "vec_id", "vec_id", "embedding", 5, cents, nprobe = 4, metric = "l2",
+      excludeSelf = true)) === exact, "clusterPrunedTopKStored")
+  }
 }
